@@ -10,7 +10,7 @@
 #    cycles the hypervisor gave to co-tenants while we were runnable)
 read -r _ u1 n1 s1 i1 w1 q1 sq1 st1 _ < /proc/stat
 t0=$(date +%s%3N)
-iters=$(taskset -c 31 python3 - <<'EOF'
+iters=$(taskset -c $(( $(nproc) - 1 )) python3 - <<'EOF'
 import hashlib, time
 blk = b'x' * 65536
 t0 = time.time(); n = 0

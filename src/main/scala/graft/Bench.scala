@@ -38,24 +38,14 @@ object Bench {
         numRepos = 200, seed = 42L, partitions = spark.sparkContext.defaultParallelism * 2)
     val kbDims = if (kbSize > 0) Some(SyntheticKb.kbDims(spark, kbSize)) else None
     val nDocs = corpus.count()
-    // phase timers for scaling forensics (stderr, env-gated, off in driver runs)
-    val trace = sys.env.contains("GRAFT_STAGE_TIMES")
-    def phase[T](label: String)(f: => T): T = {
-      val p0 = System.nanoTime()
-      val r = f
-      if (trace) System.err.println(f"  [phase] $label: ${(System.nanoTime() - p0) / 1e9}%.2f s")
-      r
-    }
     // GRAFT_BROADCAST_DIMS=false measures the shuffle-join dim path — the
     // one a real-Wikidata dimension (1.1e8 labels, past the ~1e7-row
     // cutover) would take; default true matches the driver bench
     val cfg = PipelineConfig(broadcastDims = broadcastDimsFromEnv)
     val t0 = System.nanoTime()
-    val result = phase("Pipeline.run (plan + docEntities count + canonMap ckpt)")(
-      Pipeline.run(spark, corpus, cfg, kb = kbDims))
-    phase("canonical noop write")(
-      result.canonicalTriples.write.format("noop").mode("overwrite").save())
-    val nTriples = phase("triples count")(result.triples.count())
+    val result = Pipeline.run(spark, corpus, cfg, kb = kbDims)
+    result.canonicalTriples.write.format("noop").mode("overwrite").save()
+    val nTriples = result.triples.count()
     val dt = (System.nanoTime() - t0) / 1e9
     // a PREBUILT canonical map is a session-lived artifact shared by every
     // run against this KB — unpersisting it here would drop the cached
@@ -71,23 +61,7 @@ object Bench {
     // best-of-2 reps (stage caches are row-lean), and the larger run halves
     // the fixed driver/planning share of the files/sec headline vs 50k
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILES", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local-scale knobs (cluster defaults are right at real data sizes):
-      // our rows are small but CPU-heavy, so 64MB-target AQE coalescing and
-      // 128MB scan splits would leave most cores idle
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // task-memory pages default to 64MB long[] — humongous for G1 regions,
-      // measured as continuous concurrent GC + fragmentation across reps
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, "graft-bench")
 
     // warm each query once (Janino codegen + JIT dominate first runs by
     // 5-20x and are irrelevant at cluster scale), then report the BEST of

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Pre-materialize an on-disk bench corpus without running the pipeline, so a
  * later pinned measurement leg (ScaleBenchOne) never pays the one-time
@@ -14,13 +12,8 @@ object CorpusGen {
   def main(args: Array[String]): Unit = {
     val nFiles = args(0).toLong
     val kbSize = args.lift(1).map(_.toLong).getOrElse(0L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
+      "graft-corpus-gen")
     val t0 = System.nanoTime()
     val corpus =
       if (kbSize > 0)

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 
 import graft.pipeline._
 
@@ -34,15 +33,7 @@ object RetryCheck {
   val fired = new AtomicInteger(0)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8,2]")
-      .appName("graft-retry-check")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8, "graft-retry-check", maxTaskAttempts = 2)
     import spark.implicits._
 
     val out = args.headOption.getOrElse("/tmp/graft-retry-check")

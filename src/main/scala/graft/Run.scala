@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline._
 
 /**
@@ -45,17 +44,9 @@ object Run {
       opts.get(key).orElse(if (posQueue.nonEmpty) Some(posQueue.dequeue()) else None)
     val numFiles = slot("files").map(_.toLong).getOrElse(2000L)
     val outDir = slot("out").getOrElse("/tmp/graft-out")
-    val cores = slot("cores").getOrElse("8")
+    val cores = slot("cores").map(_.toInt).getOrElse(8)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cores, "graft-kg")
     import spark.implicits._
 
     val cfg = PipelineConfig(
@@ -84,7 +75,7 @@ object Run {
         maxEntities = opts.get("max-entities").map(_.toInt).getOrElse(10)))
       .orElse(opts.get("corpus").map(dir => spark.read.parquet(dir).as[SourceFile]))
       .getOrElse(Corpus.generate(spark, numFiles, numRepos = 200, seed = 42L,
-        partitions = cores.toInt * 2))
+        partitions = cores * 2))
       .persist()
     val nDocs = corpus.count()
 

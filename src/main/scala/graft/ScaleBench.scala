@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Cluster-size scaling evidence (north_rule): the same KG pipeline job on the
  * same input at two parallelism levels — local[N] and local[4N] cores — with
@@ -19,26 +17,7 @@ object ScaleBench {
 
   def timedRun(cores: Int, nFiles: Long, warmup: Boolean,
       kbSize: Long = 0L): (Double, Long, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-$cores")
-      // default: one shuffle partition per core; GRAFT_SHUFFLE_PARTS
-      // overrides for straggler-smoothing experiments at full host width
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", cores.toString))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      // local-scale knobs (cluster defaults are right at real data sizes):
-      // our rows are small but CPU-heavy, so 64MB-target AQE coalescing and
-      // 128MB scan splits would leave most cores idle
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // task-memory pages default to 64MB long[] — humongous for G1 regions,
-      // measured as continuous concurrent GC + fragmentation across reps
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cores, s"graft-scale-$cores")
     try {
       if (warmup) Bench.runPipelineBench(spark, math.max(500L, nFiles / 20), kbSize)
       Bench.runPipelineBench(spark, nFiles, kbSize)

@@ -74,12 +74,12 @@ object DedupOps {
     // fanOut BEFORE the generator: the tokenize + n-gram assembly is
     // interpreted (HOFs are CodegenFallback) and would otherwise run inside
     // the scan stage's 1-2 tasks on small inputs — measured 3.7 s single-task
-    // vs 0.57 s fanned for this exact pass (ProbeR06, round 6); no-op at
-    // scale. Keyed by id: the distinct then plans exchange-free ({id} ⊆
-    // {id, shingle}), and so does EVERY downstream per-id aggregate over
-    // the persisted frame (shingle-count sizes, the MinHash signature
-    // groupBy) — one narrow text exchange replaces three exchanges of the
-    // 50×-wider shingle stream.
+    // vs 0.57 s fanned for this exact pass (OPTIMIZATION_r06.md "The two
+    // structural findings", round 6); no-op at scale. Keyed by id: the
+    // distinct then plans exchange-free ({id} ⊆ {id, shingle}), and so does
+    // EVERY downstream per-id aggregate over the persisted frame
+    // (shingle-count sizes, the MinHash signature groupBy) — one narrow text
+    // exchange replaces three exchanges of the 50×-wider shingle stream.
     Par.fanOutBy(docs, col(idCol))
       .select(col(idCol).as("id"), explode(grams).as("shingle")).distinct()
   }
@@ -174,6 +174,13 @@ object DedupOps {
    * min-hash columns, computed as a single HashAggregate with numHashes
    * fixed-width min() buffers — no (shingle × hashIdx) row explosion and no
    * sort aggregate. numHashes = bands * rowsPerBand.
+   *
+   * Collision property: all numHashes functions derive from ONE 64-bit
+   * xxhash64 of the shingle, so two shingles whose pre-hashes collide
+   * collide in every function at once, not independently: they act as one
+   * shingle. Negligible below about 2^32 distinct shingles (birthday
+   * bound); revisit, e.g. with a 128-bit pre-hash, before scaling past
+   * billions.
    */
   def minhashWide(sh: DataFrame, numHashes: Int): DataFrame = {
     // hash the VARIABLE-WIDTH shingle string once (xxhash64), then derive
@@ -194,15 +201,11 @@ object DedupOps {
    * LSH candidate pairs: docs sharing at least one (band, band-signature)
    * bucket; band signature = murmur3 of the band's rowsPerBand min-hashes.
    * Only same-bucket docs are ever paired — the shuffle key (band, sig)
-   * spreads uniformly by construction.
+   * spreads uniformly by construction. Takes a prebuilt (id, shingle)
+   * frame so callers that also verify with exact Jaccard share ONE
+   * persisted shingle frame instead of recomputing the tokenize→gram→
+   * distinct subtree three times.
    */
-  def lshCandidates(docs: DataFrame, n: Int = 3, bands: Int = 16,
-      rowsPerBand: Int = 4): DataFrame =
-    lshCandidatesFromShingles(shingles(docs, n), bands, rowsPerBand)
-
-  /** LSH candidates over a prebuilt (id, shingle) frame — lets callers that
-   * also verify with exact Jaccard share ONE persisted shingle frame instead
-   * of recomputing the tokenize→gram→distinct subtree three times. */
   def lshCandidatesFromShingles(sh: DataFrame, bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
     val wide = minhashWide(sh, bands * rowsPerBand)

@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
  * input is smaller than one split per core — the norm for dimension-sized
  * tables — the whole stage executes in one or two tasks while the rest of
  * the machine idles: measured 3.7 s single-task vs 0.57 s fanned out for
- * the 5-gram shingle pass over the 5 k-doc table (ProbeR06, round 6).
+ * the 5-gram shingle pass over the 5 k-doc table (OPTIMIZATION_r06.md
+ * "The two structural findings", round 6).
  *
  * The decision is derived from the INPUT SIZE (optimizer stats), not a
  * constant: fan out only when the estimated bytes are below

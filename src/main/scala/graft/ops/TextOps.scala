@@ -82,15 +82,4 @@ object TextOps {
           + least(lit(1.0), col("stopword_ratio") * 5) * 0.3
           + when(col("mean_token_len").between(3.0, 8.0), 0.2).otherwise(0.0)) * 10000) / 10000)
   }
-
-  /** Rolling polynomial hash fingerprint (base 31, mod 2^61-1) over
-   * normalized tokens — a content-defined fingerprint that both engines can
-   * compute with integer arithmetic (unlike murmur3). */
-  def rollingHash(text: Column): Column = {
-    val M = 2305843009213693951L // 2^61 - 1
-    aggregate(
-      tokens(normalized(text)),
-      lit(0L),
-      (acc, w) => pmod(acc * 31 + crc32(w.cast("binary")), lit(M)))
-  }
 }

@@ -77,7 +77,6 @@ object Canonicalize {
       .agg(min($"dst").as("m"))
       .select($"src".as("id"), least($"src", $"m").as("component"))
       .persist()
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var iter = 0
     var converged = false
     // Convergence via label-set checksum: labels are monotonically
@@ -99,7 +98,6 @@ object Canonicalize {
     // The small aggregate also eagerly fills the label cache before round 1.
     var prevChecksum: Option[String] = Some(checksumOf(labels))
     while (iter < maxIter && !converged) {
-      val itT0 = System.nanoTime()
       // propagate: min component among neighbors (and self). SHUFFLE_HASH:
       // both sides are already hash-partitioned on the join key (sym by
       // construction, labels by the previous groupBy), so the join plans
@@ -127,7 +125,6 @@ object Canonicalize {
       labels.unpersist()
       labels = next
       iter += 1
-      if (debug) println(f"  [cc] iter $iter ${(System.nanoTime() - itT0) / 1e9}%.2f s")
     }
     sym.unpersist()
     // a silent unconverged return would emit cluster FRAGMENTS whose ids

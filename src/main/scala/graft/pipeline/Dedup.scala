@@ -110,6 +110,12 @@ object Dedup {
    * row round-trip through groupByKey's key closure. Output row set is
    * identical (DedupFusionSpec pins fused == chained on duplicate-heavy
    * inputs for both fuzzy settings).
+   *
+   * INVARIANT: exactly one exchange, hashpartitioning(pairA, pairB), feeds
+   * the mapPartitions, with no exchange in between. Pairs are grouped as
+   * runs of pair-sorted rows within ONE partition, so any other shuffle
+   * would split pair groups and silently emit extra triples. The fused ==
+   * chained test in UnitSpecs asserts this on the executed plan.
    */
   def exactThenConsolidate(triples: Dataset[Triple], threshold: Double = 0.85,
       fuzzy: Boolean = true): Dataset[Triple] = {

@@ -149,7 +149,6 @@ object EntityUniverse {
   val all: Seq[EntitySpec] = entities :+ hotEntity
 
   val byTitle: Map[String, EntitySpec] = all.map(e => e.title -> e).toMap
-  val byQid: Map[String, EntitySpec] = all.map(e => e.qid -> e).toMap
 
   /**
    * German-language surface forms (langlinks fixture) — the reference is

@@ -59,14 +59,14 @@ object Link {
    */
   /**
    * @param broadcastDim ship the per-alias KB argmax as a broadcast build
-   * side (default). Measured (KbScaleProbe, round 4): the dimension is
-   * 77 MB in-memory at 10^5 entities / 133k aliases and 581 MB at 1M
-   * aliases — broadcastable well past the tested sizes, so the documented
-   * cutover is ~10^7 alias rows (≈ 5 GB, the practical broadcast ceiling);
-   * real Wikidata at ~1.1e8 labels is past it. There this flag flips the
-   * lookup to a plain shuffled hash join on aliasNorm: identical output
-   * (ScaleKbSpec pins both paths equal), one extra exchange of the mention
-   * stream.
+   * side (default). Measured (BASELINE.md "KB-dimension scale probe",
+   * round 4): the dimension is 77 MB in-memory at 10^5 entities / 133k
+   * aliases and 581 MB at 1M aliases — broadcastable well past the tested
+   * sizes, so the documented cutover is ~10^7 alias rows (≈ 5 GB, the
+   * practical broadcast ceiling); real Wikidata at ~1.1e8 labels is past
+   * it. There this flag flips the lookup to a plain shuffled hash join on
+   * aliasNorm: identical output (ScaleKbSpec pins both paths equal), one
+   * extra exchange of the mention stream.
    * @param prebuiltDim a session-lived [[bestPerAlias]] frame (must be
    * checkpointed/cached by the provider — [[KbDims.linkDim]] documents the
    * contract). The argmax is a pure function of the KB, so recomputing its

@@ -39,10 +39,11 @@ final case class PipelineConfig(
     allowedTypes: Option[Seq[String]] = None,
     // ship KB-derived dimension frames (link argmax, wikidata partOf/memberOf
     // rel table, KGC type dims, canonical map) as broadcast build sides.
-    // True to the measured 1M-alias scale (581 MB link dim, KbScaleProbe);
-    // false flips every dimension join to a shuffled hash join for KBs past
-    // the ~5 GB broadcast ceiling (real Wikidata: 1.1e8 labels). Both paths
-    // are pinned identical per site in ScaleKbSpec.
+    // True to the measured 1M-alias scale (581 MB link dim, BASELINE.md
+    // "KB-dimension scale probe"); false flips every dimension join to a
+    // shuffled hash join for KBs past the ~5 GB broadcast ceiling (real
+    // Wikidata: 1.1e8 labels). Both paths are pinned identical per site in
+    // ScaleKbSpec.
     broadcastDims: Boolean = true)
 
 /**
@@ -95,26 +96,21 @@ object KbDims {
    * the SAME amortization [[SyntheticKb.kbDims]] already applies to the
    * scaled KB (round-5 design): these frames are pure functions of the KB,
    * so rebuilding the CC loop and the per-alias argmax inside every
-   * `Pipeline.run` was fixed serial cost per run. Keyed by applicationId so
-   * artifacts from a stopped context are never served. */
-  private val defaultCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame,
+   * `Pipeline.run` was fixed serial cost per run. */
+  private val defaultCache = new BuildOnce[(String, String), (DataFrame, DataFrame,
       org.apache.spark.broadcast.Broadcast[Gazetteer])]
 
   def default(spark: SparkSession, language: String): KbDims = {
-    val key = (spark.sparkContext.applicationId, language)
     val labels = KB.labelsForLang(spark, language)
     val dbpedia = KB.dbpedia(spark)
     val lookup = KB.dbpediaLookup(spark)
-    val (canon, link, gazBc) = defaultCache.getOrElseUpdate(key, {
-      defaultCache.filterInPlace { case ((app, _), _) => app == key._1 }
+    val (canon, link, gazBc) = BuildOnce.inSession(defaultCache, spark, language) {
       val c = Canonicalize.canonicalMapFromKb(labels, dbpedia, Some(lookup))
         .localCheckpoint(true)
       val bp = Link.bestPerAlias(labels).localCheckpoint(true)
       val g = spark.sparkContext.broadcast(Gazetteer.fromKb(language))
       (c, bp, g)
-    })
+    }
     KbDims(
       labels = labels,
       wikidata = KB.wikidata(spark),
@@ -212,9 +208,8 @@ object Pipeline {
     // Re-measured round 4 on the dense scaled corpus (100k files, 10^5-entity
     // KB, 8 cores, interleaved best-of-2 pairs): 45.2/38.2/35.2 s WITH the
     // barrier vs 38.7/57.6/79.4 s without — no reproducible gain from
-    // removal, and the worst spike happened without it; kept. The env toggle
-    // exists only so the measurement stays reproducible.
-    if (!sys.env.contains("GRAFT_NO_BARRIER")) docEntities.count()
+    // removal, and the worst spike happened without it; kept.
+    docEntities.count()
     val rawTriples = Relate.triples(docEntities, wikidata, cfg.broadcastDims)
     val validated =
       if (cfg.validateTriples) Relate.validate(rawTriples, docEntities) else rawTriples

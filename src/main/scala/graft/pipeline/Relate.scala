@@ -75,9 +75,10 @@ object Relate {
    *
    * @param broadcastDim ship the KB partOf/memberOf rel table as a broadcast
    * build side (default; dimension-sized — a strict subset of the wikidata
-   * dim measured at 581 MB/1M entities by KbScaleProbe). false = shuffled
-   * hash join on qid for KBs past the ~5 GB broadcast ceiling (real
-   * Wikidata: 1.1e8 labels). Both paths pinned identical in ScaleKbSpec. */
+   * dim measured at 581 MB/1M entities, BASELINE.md "KB-dimension scale
+   * probe"). false = shuffled hash join on qid for KBs past the ~5 GB
+   * broadcast ceiling (real Wikidata: 1.1e8 labels). Both paths pinned
+   * identical in ScaleKbSpec. */
   /** KB partOf/memberOf relations exploded to (key, predicate, target)
    * rows, keyed by `keyCol` — "qid" for the per-document implicit lift,
    * "label" for KGC. ONE definition so the two lift sites cannot drift

@@ -143,31 +143,28 @@ object SyntheticKb {
   /** Driver-side gazetteer build over all m entities' aliases — cached per
    * size: the automaton is a build-once artifact (like the IVF index), and
    * the bench's warm-up + measured reps must not pay the build thrice. */
-  private val gazCache = scala.collection.concurrent.TrieMap.empty[Long, Gazetteer]
+  private val gazCache = new BuildOnce[Long, Gazetteer]
 
-  def gazetteer(m: Long): Gazetteer = gazCache.getOrElseUpdate(m, {
+  def gazetteer(m: Long): Gazetteer = gazCache(m) {
     val patterns = (0L until m).iterator.flatMap { i =>
       val s = spec(i, m)
       Iterator(s.exactAlias) ++ s.synonymAlias.iterator
     }.toSeq
     Gazetteer.build(patterns)
-  })
+  }
 
   /** Per-(SparkContext, size) cache of session-lived KB artifacts: the
    * eagerly-checkpointed label index and the canonical map. Both are
    * build-once per session — exactly like loading a label-index table once
    * per application in production; re-deriving the canonical map's CC loop
    * per pipeline run was the largest fixed serial share of a scaled run
-   * (driver-synchronized iterations over 3·10^5 identity nodes). Keyed by
-   * applicationId so artifacts from a stopped context are never served. */
-  private val dimsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), (org.apache.spark.sql.Dataset[KbLabel], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.broadcast.Broadcast[Gazetteer])]
+   * (driver-synchronized iterations over 3·10^5 identity nodes). */
+  private[pipeline] val dimsCache = new BuildOnce[(String, Long), (Dataset[KbLabel],
+      DataFrame, DataFrame, org.apache.spark.broadcast.Broadcast[Gazetteer])]
 
   /** The full KB dimension bundle for [[Pipeline.run]]. */
   def kbDims(spark: SparkSession, m: Long): KbDims = {
-    val key = (spark.sparkContext.applicationId, m)
-    val (lbl, canon, link, gazBc) = dimsCache.getOrElseUpdate(key, {
-      dimsCache.filterInPlace { case ((app, _), _) => app == key._1 } // drop dead-context entries
+    val (lbl, canon, link, gazBc) = BuildOnce.inSession(dimsCache, spark, m) {
       val l = labels(spark, m).localCheckpoint(true)
       val c = Canonicalize.canonicalMapFromKb(l, dbpedia(spark, m), None)
         .localCheckpoint(true)
@@ -181,7 +178,7 @@ object SyntheticKb {
       // arrays on every run (~17 MB at m=10^5); the handle is session-lived
       val g = spark.sparkContext.broadcast(gazetteer(m))
       (l, c, bp, g)
-    })
+    }
     KbDims(
       labels = lbl,
       wikidata = wikidata(spark, m),

@@ -49,8 +49,9 @@ object StreamingOps {
    * `kb` carries the session KB artifacts ([[KbDims]]: gazetteer broadcast,
    * canonical map, link dim). Without it each micro-batch rebuilds every
    * KB-derived dimension — seconds per batch at dimension sizes ≥ 10^5
-   * (KbScaleProbe, BASELINE.md round 5), which would dominate micro-batch
-   * latency; the batch pipeline amortizes exactly the same costs the same way.
+   * (BASELINE.md "KB-dimension probe additions", round 5), which would
+   * dominate micro-batch latency; the batch pipeline amortizes exactly the
+   * same costs the same way.
    */
   def incrementalKg(spark: SparkSession, stream: Dataset[SourceFile], outDir: String,
       cfg: PipelineConfig = PipelineConfig(),

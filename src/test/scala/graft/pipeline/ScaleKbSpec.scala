@@ -162,4 +162,20 @@ class ScaleKbSpec extends AnyFunSuite {
     assert(d1.canonicalMap.get eq d2.canonicalMap.get)
     assert(d1.labels eq d2.labels)
   }
+
+  test("kbDims builds once per key under 8 concurrent callers") {
+    val m = 1237L // a size no other spec uses, so the first call builds
+    val before = SyntheticKb.dimsCache.builds.get
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val calls = (0 until 8).map { _ =>
+        pool.submit(() => { start.await(); SyntheticKb.kbDims(spark, m) })
+      }
+      start.countDown()
+      val dims = calls.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(SyntheticKb.dimsCache.builds.get - before == 1)
+      assert(dims.map(_.gazetteerBroadcast.get.id).distinct.size == 1)
+    } finally pool.shutdown()
+  }
 }

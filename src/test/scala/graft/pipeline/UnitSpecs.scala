@@ -251,8 +251,15 @@ class DedupSpec extends AnyFunSuite {
     for (fuzzy <- Seq(true, false)) {
       val chained = Dedup.consolidatePairs(Dedup.exact(in), fuzzy = fuzzy)
         .collect().toSet
-      val fused = Dedup.exactThenConsolidate(in, fuzzy = fuzzy).collect().toSet
+      val fusedDs = Dedup.exactThenConsolidate(in, fuzzy = fuzzy)
+      val fused = fusedDs.collect().toSet
       assert(fused == chained, s"fused != chained for fuzzy=$fuzzy")
+      // the pair grouping is only correct while the fused plan adds exactly
+      // one exchange to the input's, hash-partitioned on the pair key
+      val added = PlanShuffles.of(fusedDs.queryExecution.executedPlan)
+        .diff(PlanShuffles.of(in.queryExecution.executedPlan))
+      assert(added == Seq("hashpartitioning(pairA, pairB)"),
+        s"fused dedup exchanges beyond the input's: $added")
     }
   }
 }
@@ -351,4 +358,21 @@ class CanonicalMapCutoverSpec extends AnyFunSuite {
 /** Local alias so specs share the single session. */
 object SparkHolder {
   val spark = graft.SparkTestBase.spark
+}
+
+/** The shuffle exchanges of an executed plan, AQE query stages included:
+ * hash partitionings as `hashpartitioning(col, ...)`, others by kind. */
+object PlanShuffles
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.catalyst.expressions.Attribute
+  import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+  def of(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions
+        .map { case a: Attribute => a.name; case x => x.sql }
+        .mkString("hashpartitioning(", ", ", ")")
+      case p => p.getClass.getSimpleName
+    } }
 }

@@ -229,7 +229,8 @@ class StreamingSpec extends AnyFunSuite {
     // 20k-entity SyntheticKb (the ScaleKbSpec KB) whose session artifacts
     // (gazetteer broadcast, canonical map, link dim) are built ONCE and
     // shared by the batch run and every micro-batch — without KbDims each
-    // batch would pay the full KB rebuild (KbScaleProbe, BASELINE.md r5).
+    // batch would pay the full KB rebuild (BASELINE.md "KB-dimension probe
+    // additions", round 5).
     val kbSize = 20000L
     val corpus = Corpus.generateScaled(spark, 200L, kbSize,
       numRepos = 20, seed = 42L, partitions = 4).persist()
